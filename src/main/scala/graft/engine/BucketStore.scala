@@ -1,8 +1,10 @@
 package graft.engine
 
 import graft.core.{EntryPattern, Records}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
 
 /** Parquet-backed bucket storage — the Spark-native replacement for the
@@ -372,10 +374,12 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * discovery (batch and streaming alike, same mechanism as `_rewrite`).
     *
     * Read path: when the overlay is empty (the common case) `table()` is
-    * the plain base scan — zero overhead. Otherwise a BROADCAST left
-    * join applies the latest overlay labels map-side: payload bytes
-    * never shuffle, full-payload reads stay scan-shaped. The broadcast
-    * is safe because the overlay is bounded: once it exceeds
+    * the plain base scan — zero overhead. Otherwise the latest overlay
+    * labels, held on the driver as one immutable snapshot, apply
+    * map-side through a broadcast lookup: payload bytes never shuffle,
+    * full-payload reads stay scan-shaped, and no read runs a Spark job
+    * for the overlay once the snapshot is built. Holding it on the
+    * driver is safe because the overlay is bounded: once it exceeds
     * [[overlayFoldThreshold]] rows the next PATCH folds it into the base
     * files (one amortized partition rewrite per ~100k patches).
     *
@@ -386,8 +390,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * drop the mirror overlay dirs. So a removed-then-rewritten timestamp
     * can never resurrect stale labels.
     *
-    * Sizing: ~200 B/row → the 100k default folds at ~20 MB broadcast,
-    * well inside executor budgets at any corpus size. Test seam. */
+    * Sizing: ~200 B/row → the 100k default folds at ~20 MB of driver
+    * snapshot and broadcast, well inside driver and executor budgets at
+    * any corpus size. Test seam. */
   @volatile var overlayFoldThreshold: Long = 100000L
 
   /** Parallelism for the per-partition fs METADATA ops (rename/mkdirs/
@@ -525,22 +530,6 @@ final class BucketStore(val spark: SparkSession, val root: String,
   /** Update-log rows (spec hook: seq monotonicity across restarts). */
   private[graft] def updatesLogRaw(): DataFrame = hiddenTreeRaw(UpdatesDir)
 
-  /** Driver-side overlay row count: -1 = unknown (re-seeded by the next
-    * MUTATOR under the write lock — readers never write it, a racing
-    * reader's stale seed could mask live patches). Keeps the per-patch
-    * fold-threshold check and the per-read has-overlay gate O(1)
-    * instead of a Spark count job / fs walk per call (review r15): the
-    * count only runs on the first patch of a store instance or after a
-    * partial purge left the count unknown. */
-  private val overlayRowsApprox = new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Exact overlay rows, from the driver counter when known (mutator
-    * callers only — runs a count job to re-seed when unknown). */
-  private def knownOverlayRows(): Long = {
-    val v = overlayRowsApprox.get
-    if (v >= 0L) v else overlayRowCount()
-  }
-
   /** Monotone patch sequence; persisted implicitly in overlay AND
     * update-log rows, re-seeded from the max over BOTH trees on the
     * first overlay op of a store instance: the `_updates` log outlives
@@ -557,60 +546,59 @@ final class BucketStore(val spark: SparkSession, val root: String,
       }
     }.max)
 
-  /** Latest-patch-per-key overlay aggregation, PERSISTED and cached
-    * against an OVERLAY EPOCH — a counter bumped by every overlay
-    * change, INCLUDING mid-mutation ones. dataVersion would be the
-    * wrong key (review r15): it only advances when a mutation EXITS, so
-    * a lock-free reader that built the agg before an append could
-    * re-install the stale agg after the mutator's invalidation, still
-    * keyed "current" — and the fold would then consume it and
-    * permanently drop the just-appended patch. With the epoch key, a
-    * build that observed a pre-change epoch can never install after the
-    * change (CAS guard below), and the fold always sees a fresh agg. */
+  /** The overlay as one immutable DRIVER snapshot: the latest labels per
+    * (bucket, entry, ts) and the raw overlay row count (the fold
+    * threshold counts raw rows). The overlay is bounded by
+    * [[overlayFoldThreshold]], so one collect of `_labels/` builds it,
+    * and reads apply it through a broadcast lookup instead of a join —
+    * no per-query broadcast job, no persisted aggregate to invalidate.
+    *
+    * Owning stores cache it against an OVERLAY EPOCH that every overlay
+    * change bumps both before and after it lands ([[changingOverlay]]).
+    * dataVersion would be the wrong key (review r15): it only advances
+    * when a mutation EXITS, so a reader that built before an append
+    * could keep serving the pre-append snapshot as current. A build
+    * that overlapped a change carries an epoch that is already stale,
+    * so it can be returned but is never served again. A read-only
+    * replica cannot see the primary's epoch and rebuilds on every read. */
   private val overlayEpochCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val ovAggCache =
-    new java.util.concurrent.atomic.AtomicReference[(Long, DataFrame)]()
-  /** Cache-rebuild count — observable by specs pinning one-agg-per-mutation. */
-  private[graft] val overlayAggBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val overlaySnapshotCache =
+    new java.util.concurrent.atomic.AtomicReference[OverlaySnapshot]()
+  /** Snapshot-build count — observable by specs pinning one-build-per-epoch. */
+  private[graft] val overlaySnapshotBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Retired aggs unpersist IMMEDIATELY — deferring is NOT safe here:
-    * Spark's InMemoryFileIndex compares by rootPaths, so a fresh agg
-    * over the same `_labels` root canonicalizes EQUAL to the retired
-    * one; while the retired generation is still registered,
-    * `persist()` on the new agg is a no-op ("already cached") and
-    * CacheManager substitutes the RETIRED generation's data into every
-    * new-agg query — stale labels served as current (observed: a
-    * reopened store kept serving the first patch). The cost of
-    * immediacy is bounded: a registry cursor mid-drain racing an
-    * overlay mutation may recompute evicted agg blocks from purged
-    * files and fail — the same documented cursor-vs-mutation class as
-    * partition swaps (cursors bypass readConsistent by design). */
-  private def invalidateOverlayAgg(): Unit = {
-    overlayEpochCounter.incrementAndGet() // FIRST: stale builds can't install
-    val prev = ovAggCache.getAndSet(null)
-    if (prev != null) prev._2.unpersist(false)
+  /** Run an overlay change with the epoch bumped on both sides. */
+  private def changingOverlay[T](f: => T): T = {
+    overlayEpochCounter.incrementAndGet()
+    try f finally overlayEpochCounter.incrementAndGet()
   }
 
-  private def overlayLatest(): DataFrame = {
+  private def overlaySnapshot(): OverlaySnapshot = {
     val e0 = overlayEpochCounter.get
-    val hit = ovAggCache.get
-    if (hit != null && hit._1 == e0) return hit._2
-    overlayAggBuilds.incrementAndGet()
-    val ov = overlayTableRaw()
-      .groupBy("bucket", "entry", "ts")
-      .agg(max_by(col("labels"), col("seq")).as("__ov_labels"))
-    // install only if no overlay change overlapped the build — a raced
-    // build is still correct to RETURN (the caller's own consistency
-    // comes from readConsistent), just never to CACHE
-    if (overlayEpochCounter.get != e0) return ov
-    val p = ov.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (overlayEpochCounter.get == e0 && ovAggCache.compareAndSet(hit, (e0, p))) {
-      // a replaced non-null stale hit must unpersist NOW — leaving it
-      // registered would make later persists of plan-equal aggs no-ops
-      // serving the retired data (see the rootPaths-equality doc above)
-      if (hit != null) hit._2.unpersist(false)
-      p
-    } else { p.unpersist(false); p } // lost the install race (see doc above)
+    val hit = overlaySnapshotCache.get
+    if (!readOnly && hit != null && hit.epoch == e0) return hit
+    val snap =
+      if (overlayFileCount() == 0L)
+        new OverlaySnapshot(e0, 0L, Map.empty, spark.sparkContext)
+      else {
+        overlaySnapshotBuilds.incrementAndGet()
+        val latest = scala.collection.mutable.HashMap
+          .empty[(String, String, Long), (Long, Map[String, String])]
+        val raw = overlayTableRaw()
+          .select(col("bucket"), col("entry"), col("ts"), col("seq"),
+            map_keys(col("labels")), map_values(col("labels")))
+          .collect()
+        for (r <- raw) {
+          val key = (r.getString(0), r.getString(1), r.getLong(2))
+          val seq = r.getLong(3)
+          if (latest.get(key).forall(_._1 < seq))
+            latest(key) = (seq, orderedLabels(r, 4))
+        }
+        new OverlaySnapshot(e0, raw.length.toLong,
+          latest.view.mapValues(_._2).toMap, spark.sparkContext)
+      }
+    if (!readOnly) overlaySnapshotCache.set(snap)
+    snap
   }
 
   /** Whether `spec.when` can observe record labels (see
@@ -625,34 +613,32 @@ final class BucketStore(val spark: SparkSession, val root: String,
         graft.cond.Node.readsLabels(parsed.root)
     }
 
+  /** `base` with the overlay applied: the snapshot's latest labels
+    * replace `labels` through one broadcast lookup UDF (map-side, the
+    * pattern of [[graft.pipeline.Analytics]]' bloom probe). Payload
+    * bytes never shuffle and no Spark job runs at read time; an empty
+    * overlay (the common case) leaves `base` untouched. */
   private def applyOverlay(base: DataFrame): DataFrame = {
-    // O(1) gate when the driver counter is known; fs fallback otherwise
-    val known = overlayRowsApprox.get
-    val has = if (known >= 0L) known > 0L else overlayFileCount() > 0L
-    if (!has) base
-    else
-      base.join(broadcast(overlayLatest()), Seq("bucket", "entry", "ts"), "left")
-        .withColumn("labels", coalesce(col("__ov_labels"), col("labels")))
-        .drop("__ov_labels")
+    val snap = overlaySnapshot()
+    if (snap.latest.isEmpty) base
+    else base.withColumn("labels", snap.labels)
   }
 
   /** Append overlay rows (`bucket, entry, ts, labels, seq`) via staged
     * write + rename-in: the parquet job runs outside the epoch window,
     * only the per-file renames hold it — same discipline as
     * [[overwritePartitions]], but files ADD to live overlay dirs instead
-    * of swapping them (readers dedup by seq, so accumulation is safe). */
-  /** Overlay append that ALSO feeds the `_updates` log from the same
-    * staged job: the two trees receive identical rows, and a second
-    * Spark write would double the per-patch fixed cost (measured ~2x at
-    * sf0.01) — copying the staged label-only files is bytes-proportional
-    * and cheap. */
-  private def appendOverlay(rows: DataFrame): Unit =
-    // invalidate even on FAILURE: a throw mid-rename may have landed
-    // some overlay files — the pre-append agg must not stay cached as
-    // current (review r15 pass 2)
-    try appendHiddenTree(rows, LabelsDir,
+    * of swapping them (readers dedup by seq, so accumulation is safe).
+    * The same staged job ALSO feeds the `_updates` log: the two trees
+    * receive identical rows, and a second Spark write would double the
+    * per-patch fixed cost (measured ~2x at sf0.01) — copying the staged
+    * label-only files is bytes-proportional and cheap. The epoch moves
+    * even on FAILURE: a throw mid-rename may have landed some overlay
+    * files (review r15 pass 2). */
+  private def appendOverlay(rows: DataFrame): Unit = changingOverlay {
+    appendHiddenTree(rows, LabelsDir,
       alsoCopyTo = if (updateLogEnabled) Some(UpdatesDir) else None)
-    finally invalidateOverlayAgg()
+  }
 
   /** Whether PATCHes also append to the `_updates` replication log. OFF
     * by default — the reference creates its transaction log PER
@@ -665,17 +651,6 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * creation). */
   @volatile var updateLogEnabled: Boolean = false
 
-  /** Env-gated patch-path component timing (GRAFT_PATCH_TIMING=true):
-    * stderr-only, for probes localizing per-patch cost. */
-  private val patchTiming = sys.env.get("GRAFT_PATCH_TIMING").contains("true")
-  private def ptimed[T](label: String)(f: => T): T =
-    if (!patchTiming) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[patch-timing] $label%-20s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Stage + rename-in append of (key, labels, seq) rows under a hidden
     * partitioned tree — shared by the label overlay and the update log.
     * `alsoCopyTo` duplicates each staged file into a second tree before
@@ -684,18 +659,16 @@ final class BucketStore(val spark: SparkSession, val root: String,
       alsoCopyTo: Option[String] = None): Unit = {
     val stage = new org.apache.hadoop.fs.Path(
       s"$root/$RewriteDir/${java.util.UUID.randomUUID}")
-    ptimed(s"stage-write:$dirName") {
-      graft.core.Partitioning.pinned(
-          rows.withColumn("dt", dtCol),
-          col("bucket"), col("entry"), col("dt"))
-        .write.partitionBy("bucket", "entry", "dt")
-        .mode(SaveMode.Overwrite)
-        .parquet(stage.toString)
-    }
+    graft.core.Partitioning.pinned(
+        rows.withColumn("dt", dtCol),
+        col("bucket"), col("entry"), col("dt"))
+      .write.partitionBy("bucket", "entry", "dt")
+      .mode(SaveMode.Overwrite)
+      .parquet(stage.toString)
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     crashSeamForTest(s"append:$dirName:staged")
     rewriteEpochCounter.incrementAndGet() // odd: files landing
-    try ptimed(s"rename-in:$dirName") {
+    try {
       val treeRoot = new org.apache.hadoop.fs.Path(s"$root/$dirName")
       val dirs = stagedPartitionDirs(fs, stage)
       // per-dir ops are independent (distinct paths; mkdirs of a shared
@@ -745,7 +718,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
   /** Drop the overlay dirs mirroring the given base partitions — runs
     * inside a rewrite-swap window (the caller's `extraSwapActions`). */
   private[graft] def purgeOverlayDirs(
-      affected: Iterable[(String, String, String)]): Unit = {
+      affected: Iterable[(String, String, String)]): Unit = changingOverlay {
     val fs = overlayRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dtDir(b: String, e: String, d: String) = new org.apache.hadoop.fs.Path(
       s"$root/$LabelsDir/bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d")
@@ -755,8 +728,6 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // with dead entry/bucket dirs (review r15)
     gcEmptyParents(fs, affected.map(a => (a._1, a._2)).toSet[(String, String)]
       .map { case (b, e) => dtDir(b, e, "x").getParent })
-    overlayRowsApprox.set(-1L) // partial purge: count unknown until re-seeded
-    invalidateOverlayAgg() // the overlay changed mid-mutation
   }
 
   /** Best-effort GC of empty `entry=` skeleton dirs (and their `bucket=`
@@ -837,14 +808,13 @@ final class BucketStore(val spark: SparkSession, val root: String,
   def foldLabelOverlay(): Long = mutating { foldOverlayLocked() }
 
   private def foldOverlayLocked(): Long = {
-    val n = knownOverlayRows()
-    if (n == 0L) return 0L
-    val affected = collectAffected(overlayTableRaw().select("bucket", "entry", "ts"))
+    val snap = overlaySnapshot()
+    if (snap.rows == 0L) return 0L
+    val affected = partitionsOf(snap.latest.keysIterator)
     val rewritten = prunedPartitionScan(affected) // effective labels
     overwritePartitions(rewritten,
       extraSwapActions = () => purgeOverlayDirs(affected))
-    overlayRowsApprox.set(0L) // fold purged every overlay partition
-    n
+    snap.rows
   }
 
   /** Append a batch of records.
@@ -919,9 +889,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
       case Conflict.Error =>
         // one aggregation pass yields BOTH the in-batch-duplicate flag and
         // the ts bounds for the overlap check (was two scans)
-        val stats = ptimed("write:stats-agg")(batch0
+        val stats = batch0
           .groupBy("bucket", "entry", "ts").count()
-          .agg(max("count"), min("ts"), max("ts")).collect()(0))
+          .agg(max("count"), min("ts"), max("ts")).collect()(0)
         if (!stats.isNullAt(0) && stats.getLong(0) > 1) {
           val dup = batch0.groupBy("bucket", "entry", "ts").count()
             .filter(col("count") > 1).limit(1).collect()(0) // rare path
@@ -932,9 +902,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
           val existing = baseTableOrEmpty() // keys only
             .filter(col("ts").between(stats.getLong(1), stats.getLong(2)))
             .select("bucket", "entry", "ts")
-          val clash = ptimed("write:clash-check")(
-            batch0.join(existing, Seq("bucket", "entry", "ts"))
-              .limit(1).collect())
+          val clash = batch0.join(existing, Seq("bucket", "entry", "ts"))
+            .limit(1).collect()
           if (clash.nonEmpty)
             throw new IllegalArgumentException(
               s"record already exists: ${clash(0)}")
@@ -957,8 +926,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .mode(SaveMode.Append)
     // per-write codec override (replication transfer compression); None
     // keeps the session default (zstd, set above)
-    try ptimed("write:partitioned-write")(
-      codec.fold(writer)(c => writer.option("compression", c)).parquet(root))
+    try codec.fold(writer)(c => writer.option("compression", c)).parquet(root)
     catch { case NonFatal(e) =>
       // the empty-store duplicate check raises inside the job: re-shape
       // the SparkException wrapping back to the admission contract's
@@ -1198,7 +1166,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .withColumn("seq", lit(overlaySeqCounter.incrementAndGet()))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = ptimed("match+persist+count")(patched.count())
+      val n = patched.count()
       if (n == 0) return 0
       applyPatch(patched, n)
       n
@@ -1223,13 +1191,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // staged write (appendOverlay copies the staged files); the bulk
     // path runs the one extra small job.
     if (n <= overlayFoldThreshold) {
-      val before = knownOverlayRows() // O(1) once seeded
-      try appendOverlay(patched) // also feeds _updates/
-      catch { case NonFatal(e) =>
-        overlayRowsApprox.set(-1L) // partial landing: count unknown
-        throw e
-      }
-      overlayRowsApprox.set(before + n)
+      val before = overlaySnapshot().rows // built by the patch's own read
+      appendOverlay(patched) // also feeds _updates/
       if (before + n > overlayFoldThreshold) foldOverlayLocked(): Unit
     } else {
       if (updateLogEnabled)
@@ -1329,17 +1292,22 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // match phase: a when-condition that can't observe labels (&ref /
     // $ref / $exists / #ext) selects identical keys on the BASE table,
     // so the common time-range / $each_n / retention removes skip the
-    // overlay broadcast join AND the overlay-agg build while patches
-    // are outstanding. The rewrite below still folds effective labels
-    // into the affected partitions either way (purge invariant).
+    // overlay lookup while patches are outstanding. The rewrite below
+    // still folds effective labels into the affected partitions either
+    // way (purge invariant).
     val all = if (specReadsLabels(spec)) table() else baseTable()
     val matched = QueryEngine.matching(all, spec).select("bucket", "entry", "ts")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = ptimed("rm:match+count")(matched.count())
+      // one aggregation yields both the removed count and the affected-
+      // partition list, materialized before any file is touched
+      val perPartition = matched
+        .groupBy(col("bucket"), col("entry"), dtCol.as("dt")).count()
+        .collect()
+      val n = perPartition.iterator.map(_.getLong(3)).sum
       if (n == 0) return 0
-      // materialize the affected-partition list before any file is touched
-      val affected = ptimed("rm:affected")(collectAffected(matched))
+      val affected = perPartition.map(r =>
+        (r.getString(0), r.getString(1), r.getDate(2).toString))
       // survivors are consumed by exactly one action — the staged write
       // inside overwritePartitions. No localCheckpoint: checkpointing
       // the survivor set materializes (corpus - removed) bytes into
@@ -1350,84 +1318,66 @@ final class BucketStore(val spark: SparkSession, val root: String,
       // removal or none of it.
       val survivors = prunedPartitionScan(affected)
         .join(matched, Seq("bucket", "entry", "ts"), "left_anti")
-      ptimed("rm:overwrite") {
-        overwritePartitions(survivors,
-          dropMissingFrom = affected,
-          // survivors carry folded effective labels; purging the affected
-          // overlay dirs in the SAME swap keeps the live-records-only
-          // invariant (a later re-write of a removed ts must not see
-          // stale overlay labels)
-          extraSwapActions = () => purgeOverlayDirs(affected))
-      }
+      overwritePartitions(survivors,
+        dropMissingFrom = affected,
+        // survivors carry folded effective labels; purging the affected
+        // overlay dirs in the SAME swap keeps the live-records-only
+        // invariant (a later re-write of a removed ts must not see
+        // stale overlay labels)
+        extraSwapActions = () => purgeOverlayDirs(affected))
       n
     } finally matched.unpersist()
   }
 
   /** Batched per-record label updates (the io v2 PATCH verb): each key
-    * carries its own set/remove delta; ONE pruned partition-rewrite pass
-    * applies them all (a per-record loop would rewrite partitions k
-    * times). Returns the number of records found and patched. */
+    * carries its own set/remove delta; ONE overlay append applies them
+    * all (a per-record loop would append k times). Returns the number of
+    * records found and patched. */
   def updateLabelsBatch(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])]): Long =
     updateLabelsMatched(bucket, updates0).size.toLong
 
   /** [[updateLabelsBatch]] returning the matched (entry, ts) keys —
-    * the folded variant attributes matches back to each folded request. */
+    * the folded variant attributes matches back to each folded request.
+    * Planned on the driver: ONE `isin` read collects the effective
+    * labels of the batch's keys, the composed deltas merge here, and
+    * the merged rows append to the overlay. */
   def updateLabelsMatched(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])])
       : Set[(String, Long)] = mutating {
     if (updates0.isEmpty) return Set.empty
-    // compose duplicate (entry, ts) deltas IN ORDER before the join —
-    // the inner join would otherwise emit same-seq overlay rows with a
-    // nondeterministic winner and an inflated match count (review r15).
-    // Composition: later sets win, later removes drop earlier sets,
-    // a later set resurrects an earlier remove (apply-in-order).
-    val updates = updates0.groupBy(u => (u._1, u._2)).values.map { vs =>
-      vs.reduce { (a, b) =>
-        (a._1, a._2, (a._3 -- b._4) ++ b._3, (a._4 ++ b._4) -- b._3.keySet)
+    // compose duplicate (entry, ts) deltas IN ORDER — one overlay row
+    // per record, never same-seq rows with a nondeterministic winner
+    // (review r15). Composition: later sets win, later removes drop
+    // earlier sets, a later set resurrects an earlier remove
+    // (apply-in-order).
+    val updates = updates0.groupBy(u => (u._1, u._2)).map { case (k, vs) =>
+      k -> vs.map(u => (u._3, u._4)).reduce { (a, b) =>
+        ((a._1 -- b._2) ++ b._1, (a._2 ++ b._2) -- b._1.keySet)
       }
-    }.toSeq
-    import scala.jdk.CollectionConverters._
-    val patchSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("entry", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__set",
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType)),
-      org.apache.spark.sql.types.StructField("__drop",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))))
-    val patches = spark.createDataFrame(
-      updates.map { case (e, ts, set, remove) =>
-        org.apache.spark.sql.Row(bucket, e, ts, set, (remove ++ set.keys).toSeq)
-      }.asJava, patchSchema)
-    val patched = table()
+    }
+    val tss = updates.keys.map(_._2).toSeq
+    val current = table()
       .filter(col("bucket") === bucket &&
-        col("entry").isin(updates.map(_._1).distinct: _*) &&
-        col("ts").between(updates.map(_._2).min, updates.map(_._2).max))
-      .join(broadcast(patches), Seq("bucket", "entry", "ts"), "inner")
-      .select(col("bucket"), col("entry"), col("ts"),
-        map_concat(
-          map_filter(coalesce(col("labels"), map().cast("map<string,string>")),
-            (k, _) => !array_contains(coalesce(col("__drop"),
-              array().cast("array<string>")), k)),
-          coalesce(col("__set"), map().cast("map<string,string>"))).as("labels"))
-      .withColumn("seq", lit(overlaySeqCounter.incrementAndGet()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // keys, not a bare count: the folded variant needs per-request
-      // match attribution, and the frame is persisted + batch-bounded,
-      // so collecting (entry, ts) costs what count() did
-      val keys = patched.select("entry", "ts").collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      if (keys.isEmpty) return Set.empty
-      applyPatch(patched, keys.length.toLong)
-      keys.toSet
-    } finally patched.unpersist()
+        col("entry").isin(updates.keys.map(_._1).toSeq: _*) &&
+        col("ts").between(tss.min, tss.max) && col("ts").isin(tss: _*))
+      .select(col("entry"), col("ts"),
+        map_keys(col("labels")), map_values(col("labels")))
+      .collect()
+      .filter(r => updates.contains((r.getString(0), r.getLong(1))))
+    if (current.isEmpty) return Set.empty
+    val seq = overlaySeqCounter.incrementAndGet()
+    val rows = current.map { r =>
+      val (set, remove) = updates((r.getString(0), r.getLong(1)))
+      val cur = Option(orderedLabels(r, 2)).getOrElse(ListMap.empty[String, String])
+      Row(bucket, r.getString(0), r.getLong(1), (cur -- remove -- set.keys) ++ set, seq)
+    }
+    import scala.jdk.CollectionConverters._
+    applyPatch(spark.createDataFrame(rows.toSeq.asJava,
+      StructType(overlayStoredSchema.dropRight(1))), rows.length.toLong)
+    current.iterator.map(r => (r.getString(0), r.getLong(1))).toSet
   }
 
-  /** Remove records by explicit (entry, ts) keys (remove_records.rs:34-60,
-    * the ts-list form); returns per-key found/not-found. */
   /** Which of `ts` already exist for (bucket, entry) — the per-record
     * admission check behind the batched write/update endpoints' error
     * maps (write_batched.rs / update_batched.rs report per-record
@@ -1460,41 +1410,46 @@ final class BucketStore(val spark: SparkSession, val root: String,
     hits.intersect(keys.toSet)
   }
 
+  /** Remove records by explicit (entry, ts) keys (remove_records.rs:34-60,
+    * the ts-list form); returns per-key found/not-found. Planned on the
+    * driver: [[existingKeys]] finds the keys (one job), their affected
+    * (bucket, entry, dt) partitions follow from the found ts in the
+    * session time zone, and a driver-built `entry`/`ts` `isin`
+    * predicate drops them from the one partition rewrite. */
   def removeRecords(bucket: String,
       keys: Seq[(String, Long)]): Map[(String, Long), Boolean] = mutating {
     if (keys.isEmpty) return Map.empty
-    import scala.jdk.CollectionConverters._
-    val keyDf = spark.createDataFrame(
-      keys.map { case (e, ts) => org.apache.spark.sql.Row(bucket, e, ts) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("entry", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType))))
-    val existing = baseTable() // keys only — overlay can't change them
-      .filter(col("bucket") === bucket && col("entry").isin(keys.map(_._1).distinct: _*) &&
-        col("ts").between(keys.map(_._2).min, keys.map(_._2).max))
-      .join(broadcast(keyDf), Seq("bucket", "entry", "ts"), "left_semi")
-      .select("bucket", "entry", "ts")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val found = existing.collect().map(r => (r.getString(1), r.getLong(2))).toSet
-      if (found.nonEmpty) {
-        val affected = collectAffected(existing)
-        // one action (the staged write) — no localCheckpoint, see
-        // removeQuery; fully-emptied partitions drop via dropMissingFrom
-        val survivors = prunedPartitionScan(affected)
-          .join(broadcast(existing), Seq("bucket", "entry", "ts"), "left_anti")
-        overwritePartitions(survivors,
-          dropMissingFrom = affected,
-          extraSwapActions = () => purgeOverlayDirs(affected))
-      }
-      keys.map(k => k -> found(k)).toMap
-    } finally existing.unpersist()
+    val found = existingKeys(bucket, keys)
+    if (found.nonEmpty) {
+      val affected = partitionsOf(found.iterator.map { case (e, ts) => (bucket, e, ts) })
+      val removed = found.groupBy(_._1).map { case (e, ks) =>
+        col("entry") === e && col("ts").isin(ks.toSeq.map(_._2): _*)
+      }.reduce(_ || _)
+      // one action (the staged write) — no localCheckpoint, see
+      // removeQuery; fully-emptied partitions drop via dropMissingFrom
+      overwritePartitions(prunedPartitionScan(affected).filter(!removed),
+        dropMissingFrom = affected,
+        extraSwapActions = () => purgeOverlayDirs(affected))
+    }
+    keys.map(k => k -> found(k)).toMap
   }
 
   private def collectAffected(matched: DataFrame): Array[(String, String, String)] =
     matched.withColumn("dt", dtCol).select("bucket", "entry", "dt").distinct()
       .collect().map(r => (r.getString(0), r.getString(1), r.getDate(2).toString))
+
+  /** The distinct (bucket, entry, dt) partitions of driver-known keys —
+    * [[dtCol]]'s day, computed in the session time zone without a job. */
+  private def partitionsOf(
+      keys: Iterator[(String, String, Long)]): Array[(String, String, String)] = {
+    val zone = java.time.ZoneId.of(
+      spark.conf.get("spark.sql.session.timeZone"), java.time.ZoneId.SHORT_IDS)
+    keys.map { case (b, e, ts) =>
+      val day = java.time.Instant.EPOCH.plus(ts, java.time.temporal.ChronoUnit.MICROS)
+        .atZone(zone).toLocalDate
+      (b, e, java.sql.Date.valueOf(day).toString)
+    }.toArray.distinct
+  }
 
   /** Scan exactly the given (bucket, entry, dt) partitions, `dt` dropped.
     * The isin filters are on PARTITION columns, so they prune at the file
@@ -1680,14 +1635,12 @@ final class BucketStore(val spark: SparkSession, val root: String,
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(path, true)
     // mirror overlay + update-log subtrees go with the entry
-    fs.delete(new org.apache.hadoop.fs.Path(
+    changingOverlay(fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/$LabelsDir/bucket=${escapePartition(bucket)}/entry=${escapePartition(entry)}"),
-      true)
+      true))
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/$UpdatesDir/bucket=${escapePartition(bucket)}/entry=${escapePartition(entry)}"),
       true)
-    overlayRowsApprox.set(-1L)
-    invalidateOverlayAgg()
   }
 
   /** Rename a bucket (storage/bucket rename): a directory move — no data
@@ -1702,7 +1655,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
       throw new IllegalArgumentException(s"Bucket '$to' already exists")
     if (!fs.rename(src, dst))
       throw new IllegalStateException(s"rename failed: $src -> $dst")
-    for (tree <- Seq(LabelsDir, UpdatesDir)) {
+    // snapshot keys carry the bucket name: the overlay epoch moves
+    changingOverlay(for (tree <- Seq(LabelsDir, UpdatesDir)) {
       val tSrc = new org.apache.hadoop.fs.Path(
         s"$root/$tree/bucket=${escapePartition(from)}")
       if (fs.exists(tSrc)) {
@@ -1711,8 +1665,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
         fs.mkdirs(tDst.getParent)
         fs.rename(tSrc, tDst): Unit // keys carry the bucket name in the path
       }
-    }
-    invalidateOverlayAgg() // agg rows carry the old bucket name
+    })
   }
 
   def removeBucket(bucket: String): Unit = mutating {
@@ -1720,12 +1673,10 @@ final class BucketStore(val spark: SparkSession, val root: String,
       s"$root/bucket=${escapePartition(bucket)}")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(path, true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$root/$LabelsDir/bucket=${escapePartition(bucket)}"), true)
+    changingOverlay(fs.delete(new org.apache.hadoop.fs.Path(
+      s"$root/$LabelsDir/bucket=${escapePartition(bucket)}"), true))
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/$UpdatesDir/bucket=${escapePartition(bucket)}"), true)
-    overlayRowsApprox.set(-1L)
-    invalidateOverlayAgg()
   }
 
   /** Bytes on disk per bucket (for quotas). */
@@ -1907,10 +1858,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * Returns evicted partition count. */
   def enforceFifoQuota(bucket: String, maxBytes: Long): Int = mutating {
     var evicted = 0
-    // evictions drop overlay day-dirs too: count + agg cache must reset
-    // whichever exit path the loop takes (epoch-keyed cache, review r15)
-    try enforceFifoLoop(bucket, maxBytes, n => evicted = n)
-    finally if (evicted > 0) { overlayRowsApprox.set(-1L); invalidateOverlayAgg() }
+    enforceFifoLoop(bucket, maxBytes, n => evicted = n)
     evicted
   }
 
@@ -1945,8 +1893,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
         val p = new org.apache.hadoop.fs.Path(e.getPath, s"dt=$dt")
         if (fs.exists(p)) {
           fs.delete(p, true)
-          fs.delete(new org.apache.hadoop.fs.Path( // mirror overlay day
-            s"$root/$LabelsDir/bucket=${escapePartition(bucket)}/${e.getPath.getName}/dt=$dt"), true)
+          changingOverlay(fs.delete(new org.apache.hadoop.fs.Path( // mirror overlay day
+            s"$root/$LabelsDir/bucket=${escapePartition(bucket)}/${e.getPath.getName}/dt=$dt"), true))
           any = true; evicted += 1; report(evicted)
         }
       }
@@ -2314,6 +2262,26 @@ object BucketStore {
     StructField("labels", MapType(StringType, StringType), nullable = true),
     StructField("seq", LongType, nullable = false),
     StructField("dt", DateType)))
+
+  /** Immutable driver view of the label overlay at one overlay epoch:
+    * the latest labels per (bucket, entry, ts) and the raw row count. */
+  private[engine] final class OverlaySnapshot(val epoch: Long, val rows: Long,
+      val latest: Map[(String, String, Long), Map[String, String]],
+      sc: org.apache.spark.SparkContext) {
+    /** `labels` with the latest overlay labels applied — one broadcast
+      * per snapshot, shared by every read that applies it. */
+    lazy val labels: Column = {
+      val bc = sc.broadcast(latest)
+      val lookup = udf((b: String, e: String, ts: Long) => bc.value.get((b, e, ts)).orNull)
+      coalesce(lookup(col("bucket"), col("entry"), col("ts")), col("labels"))
+    }
+  }
+
+  /** A labels map collected as its `map_keys`/`map_values` arrays at
+    * columns `i`/`i + 1`, in stored order (null map → null). */
+  private[engine] def orderedLabels(r: Row, i: Int): Map[String, String] =
+    if (r.isNullAt(i)) null
+    else ListMap(r.getSeq[String](i).zip(r.getSeq[String](i + 1)): _*)
 
   def emptyRecords(spark: SparkSession): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),

@@ -53,10 +53,20 @@ final class SystemEventForwarder(
     * per-event POST's lone 409), and failover follows [[send]]'s policy
     * (connect error / 5xx → next base; 4xx is final — the primary
     * answered). Returns true only when the batch landed with ZERO
-    * per-record errors — the AND of the per-event results, as before. */
+    * per-record errors — the AND of the per-event results, as before.
+    *
+    * The batch wire carries one request header per record, and the
+    * JDK `HttpServer` rejects requests with more than 200 headers, so
+    * the events go out in chunks of at most [[MaxBatchRecords]]. Every
+    * chunk is sent even after one fails: the flush has already drained
+    * its buffers. */
   def sendBatch(
+      events: Seq[(String, Long, Map[String, String], Array[Byte])]): Boolean =
+    events.grouped(SystemEventForwarder.MaxBatchRecords).toSeq
+      .map(sendChunk).forall(identity)
+
+  private def sendChunk(
       events: Seq[(String, Long, Map[String, String], Array[Byte])]): Boolean = {
-    if (events.isEmpty) return true
     if (events.size == 1) {
       val e = events.head
       return send(e._1, e._2, e._3, e._4)
@@ -154,6 +164,11 @@ final class SystemEventForwarder(
 }
 
 object SystemEventForwarder {
+  /** Records per forwarded batch request: one header each, well under
+    * the JDK `HttpServer`'s 200-header cap with room for the standard
+    * request headers. */
+  val MaxBatchRecords = 100
+
   /** `RS_PRIMARY_URL` / `RS_SECONDARY_URL` +
     * `RS_SYSTEM_EVENTS_REMOTE_TIMEOUT` (seconds). None when neither URL
     * is configured — the caller keeps its local sink then. The

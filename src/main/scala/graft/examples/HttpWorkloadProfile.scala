@@ -4,8 +4,8 @@ import graft.{Bench, GraftSession}
 
 /** Bench's w_http_concurrent entry in isolation, with a Spark listener
   * counting jobs and their wall time — localizes where the serving
-  * entry's seconds go (args: [reps]). Run with GRAFT_PATCH_TIMING=true
-  * for the store-internal phase breakdown too. */
+  * entry's seconds go (args: [reps]). For the per-layer split, run the
+  * traced benchmark (`perfbench/run.py --trace 1`). */
 object HttpWorkloadProfile {
   def main(args: Array[String]): Unit = {
     val reps = if (args.nonEmpty) args(0).toInt else 3

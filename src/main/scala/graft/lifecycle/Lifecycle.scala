@@ -128,7 +128,7 @@ object Lifecycle {
     val drained = store.usage.drain()
     // base table, not table(): per-bucket record/entry COUNTS cannot be
     // changed by label patches, so the snapshot job skips the overlay
-    // broadcast join and rides the version-cached file index (r20 — this
+    // lookup and rides the version-cached file index (r20 — this
     // job runs every 60 s tick and on every shutdown flush)
     val snapshot = store.baseTableOrEmpty().groupBy("bucket")
       .agg(count(lit(1)).as("records"),

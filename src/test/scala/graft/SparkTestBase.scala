@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
@@ -10,6 +11,20 @@ import org.scalatest.Suite
   */
 trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Spark jobs started while `f` runs (listener-bus flushed before
+    * counting). */
+  def countJobs(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { f; Thread.sleep(500) } // jobs start synchronously; let the bus drain
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
 
   override def afterAll(): Unit = super.afterAll()
 }

@@ -244,20 +244,48 @@ class LabelOverlaySpec extends AnyFunSuite with SparkTestBase {
     assert(labelsOf(new BucketStore(spark, store.root))(2L) == Map("v" -> "bulk"))
   }
 
-  test("overlay aggregation builds once per mutation, not per query") {
+  test("overlay snapshot builds once per mutation, not per query") {
     val store = newStore()
     store.write(recordsDf(Seq(("e", 1L, Map("v" -> "0")), ("e", 2L, Map("v" -> "0")))))
     store.updateLabels(QuerySpec(), set = Map("v" -> "1")): Unit
-    val b0 = store.overlayAggBuilds.get()
+    val b0 = store.overlaySnapshotBuilds.get()
     (1 to 5).foreach(_ => store.table().count(): Unit)
-    assert(store.overlayAggBuilds.get() == b0 + 1,
-      "five reads over one overlay state must build the agg exactly once")
+    assert(store.overlaySnapshotBuilds.get() == b0 + 1,
+      "five reads over one overlay state must build the snapshot exactly once")
     // a new PATCH invalidates: the next read rebuilds exactly once more
     store.updateLabels(QuerySpec(), set = Map("v" -> "2")): Unit
     (1 to 3).foreach(_ => store.table().count(): Unit)
-    assert(store.overlayAggBuilds.get() <= b0 + 3, // patch itself may build once
-      s"reads after one more patch rebuilt too often: ${store.overlayAggBuilds.get() - b0}")
+    assert(store.overlaySnapshotBuilds.get() <= b0 + 3, // patch itself may build once
+      s"reads after one more patch rebuilt too often: ${store.overlaySnapshotBuilds.get() - b0}")
     assert(labelsOf(store).values.toSet == Set(Map("v" -> "2")))
+  }
+
+  test("Spark-job budget with a non-empty overlay: a query runs 1 job, " +
+      "an 8-key PATCH and an 8-key DELETE at most 3 each") {
+    val store = newStore()
+    store.write(recordsDf((1L to 32L).map(ts => ("e", ts, Map("v" -> "0")))))
+    store.updateLabelsBatch("b", Seq(("e", 1L, Map("v" -> "p"), Set.empty[String]))): Unit
+    val spec = QuerySpec(when = Some("""{"&v": {"$eq": "p"}}"""))
+    store.table(): Unit // builds the snapshot for this overlay state
+    val queryJobs = countJobs {
+      assert(QueryEngine.queryUnordered(store.table(), spec).collect().length == 1)
+    }
+    assert(queryJobs == 1, s"query ran $queryJobs jobs")
+    val patchJobs = countJobs {
+      assert(store.updateLabelsBatch("b", (2L to 9L).map(ts =>
+        ("e", ts, Map("v" -> "p"), Set.empty[String]))) == 8L)
+    }
+    assert(patchJobs <= 3, s"8-key PATCH ran $patchJobs jobs")
+    store.table(): Unit // builds the snapshot for the patched state
+    val removeJobs = countJobs {
+      assert(store.removeRecords("b", (10L to 17L).map(ts => ("e", ts)))
+        .values.forall(identity))
+    }
+    assert(removeJobs <= 3, s"8-key DELETE ran $removeJobs jobs")
+    val ls = labelsOf(store)
+    assert(ls.keySet == (1L to 9L).toSet ++ (18L to 32L).toSet)
+    assert((1L to 9L).forall(ls(_) == Map("v" -> "p")) &&
+      (18L to 32L).forall(ls(_) == Map("v" -> "0")))
   }
 
   test("seq re-seeds from the updates LOG across fold+reopen — replication winner stays the newest patch") {

@@ -131,6 +131,67 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
     primary.close()
   }
 
+  test("replica reads a label PATCH landed by another writer after " +
+      "refreshReplica (no cached overlay survives the refresh)") {
+    import org.apache.spark.sql.functions.{col, element_at}
+    val root = Files.createTempDirectory("graft-replica-labels").toString
+    val primary = new BucketStore(spark, root)
+    primary.writeBatch("b", "e", Seq((1L, Map("k" -> "v0"), "r".getBytes("UTF-8"))))
+    assert(primary.updateLabelsBatch("b",
+      Seq(("e", 1L, Map("k" -> "v1"), Set.empty[String]))) == 1L)
+    val replica = new BucketStore(spark, root, readOnly = true)
+    def replicaLabel(): String = replica.readConsistent(
+      replica.table().select(element_at(col("labels"), "k")).collect())
+      .map(_.getString(0)).mkString(",")
+    assert(replicaLabel() == "v1")
+    // another process's PATCH: a higher-seq overlay row written with a
+    // plain Spark writer and renamed into `_labels/` — no store instance
+    // sees it land. (A Spark write straight into `_labels/` would
+    // refresh this JVM's cached plans over that path through
+    // CacheManager.recacheByPath, which a second process never does.)
+    import scala.jdk.CollectionConverters._
+    val foreign = Files.createTempDirectory("graft-foreign-patch").toString
+    spark.createDataFrame(Seq(org.apache.spark.sql.Row(
+        "b", "e", 1L, Map("k" -> "v2"), 1000L, java.sql.Date.valueOf("1970-01-01"))).asJava,
+        BucketStore.overlayStoredSchema)
+      .write.partitionBy("bucket", "entry", "dt")
+      .mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(foreign)
+    val rel = "bucket=b/entry=e/dt=1970-01-01"
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (f <- fs.listStatus(new org.apache.hadoop.fs.Path(s"$foreign/$rel"))
+        if f.getPath.getName.endsWith(".parquet"))
+      assert(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(
+        s"$root/${BucketStore.LabelsDir}/$rel/${f.getPath.getName}")))
+    replica.refreshReplica()
+    assert(replicaLabel() == "v2", "the replica must serve the newest patch")
+    primary.close()
+  }
+
+  test("replica forwards a 250-event flush in chunks under the server's " +
+      "header cap; every event lands on the primary") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft-fwd-chunks").toString
+    val primary = new BucketStore(spark, root)
+    val primaryApi = new HttpApi(primary, apiToken = "shared")
+    val pPort = primaryApi.start()
+    try {
+      val fwd = new SystemEventForwarder(Some(s"http://127.0.0.1:$pPort"),
+        None, "shared")
+      val base = 1_700_000_000_000_000L
+      val events = (0 until 250).map(i => (s"forwarded/b${i % 7}", base + i,
+        Map("status" -> "200"), s"""{"i":$i}""".getBytes("UTF-8")))
+      assert(fwd.sendBatch(events), "every chunk must land")
+      val landed = primary.readConsistent {
+        primary.table().filter(col("bucket") === "$system" &&
+            col("entry").startsWith("forwarded/"))
+          .select("entry", "ts").collect()
+      }.map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(landed == events.map(e => (e._1, e._2)).toSet)
+    } finally { primaryApi.stop(); primary.close() }
+  }
+
   test("HTTP facade on a replica: reads serve, writes 403 with the " +
       "check_mode message; role env must agree with the store") {
     import java.net.URI

@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.SparkTestBase
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -12,20 +11,6 @@ import java.nio.file.Files
   * O(buckets) Spark jobs (measured ~1.5 s each: a 300-bucket instance
   * took 7.5 min to flush and a 10k-bucket one could never drain). */
 class SystemLogSpec extends AnyFunSuite with SparkTestBase {
-
-  /** Spark jobs started while `f` runs (listener-bus flushed before
-    * counting). */
-  private def countJobs(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { f; Thread.sleep(500) } // jobs start synchronously; let the bus drain
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   test("events(batch) lands every event in ONE write, ts in sequence order") {
     val store = new BucketStore(spark,
