@@ -41,11 +41,13 @@ final class AuditLog(store: BucketStore, instance: String,
     if (path == "/api/v1/alive" || path == "/api/v1/ready") return
     val name = if (status == 401) Some("unauthorized") else tokenName
     name.foreach { n =>
-      buf.merge((n, method, path, status), (1L, durationSec),
-        (a: (Long, Double), b: (Long, Double)) => (a._1 + b._1, a._2 + b._2))
+      buf.merge((n, method, path, status), (1L, durationSec), addTally)
       if (buf.size >= flushEvery) flush(clientIp)
     }
   }
+
+  private val addTally: java.util.function.BiFunction[(Long, Double),
+    (Long, Double), (Long, Double)] = (a, b) => (a._1 + b._1, a._2 + b._2)
 
   /** Drain the buffer into one `$system` write (no-op when empty).
     * `client_ip` on a flushed row is the flushing request's — an
@@ -65,20 +67,28 @@ final class AuditLog(store: BucketStore, instance: String,
       s""""client_ip":${clientIp.map(js).getOrElse("null")},""" +
       s""""call_count":$n,"duration":$dur}"""
 
-  /** Drain the buffer into [[SystemLog.Event]]s for a SHARED `$system`
-    * write: the periodic tick and the shutdown flush fold the audit
-    * drain into the usage flush's single store mutation instead of
-    * paying a second one (one job per flush, not two — the mutation's
-    * fixed cost is the measured serving bottleneck). Entry, labels and
-    * payload are identical to [[flush]]'s rows; ts assignment moves to
-    * the syslog's shared strictly-increasing clock. */
-  def drainAsEvents(clientIp: Option[String] = None,
-      nowUs: Long = System.currentTimeMillis() * 1000L): Seq[SystemLog.Event] = {
-    if (!enabled || buf.isEmpty) return Seq.empty
-    drainBuf().map { case ((token, method, path, status), (n, dur)) =>
-      SystemLog.Event("audit", token, status,
-        payloadJson(token, method, path, clientIp, n, dur), nowUs)
-    }
+  /** Drain the buffer into [[SystemLog.Event]]s and hand them to
+    * `write`, a SHARED `$system` write: the periodic tick and the
+    * shutdown flush fold the audit drain into the usage flush's single
+    * store mutation instead of paying a second one (one job per flush,
+    * not two — the mutation's fixed cost is the measured serving
+    * bottleneck). Entry, labels and payload are identical to [[flush]]'s
+    * rows; ts assignment moves to the syslog's shared strictly-increasing
+    * clock. When `write` returns false or throws, the drained tallies
+    * merge back into the buffer for the next flush. Returns `write`'s
+    * result. */
+  def drainInto(write: Seq[SystemLog.Event] => Boolean): Boolean = {
+    val drained = if (enabled) drainBuf() else Seq.empty
+    def rebuffer(): Unit = for ((k, v) <- drained) buf.merge(k, v, addTally)
+    val nowUs = System.currentTimeMillis() * 1000L
+    val written =
+      try write(drained.map { case ((token, method, path, status), (n, dur)) =>
+        SystemLog.Event("audit", token, status,
+          payloadJson(token, method, path, None, n, dur), nowUs)
+      })
+      catch { case NonFatal(e) => rebuffer(); throw e }
+    if (!written) rebuffer()
+    written
   }
 
   def flush(clientIp: Option[String] = None,

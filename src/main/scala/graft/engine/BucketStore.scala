@@ -292,11 +292,6 @@ final class BucketStore(val spark: SparkSession, val root: String,
     dirtyEntrySet.clear()
   }
 
-  /** Message prefix of the in-job duplicate-key raise on the empty-store
-    * write path — matched when re-shaping the job failure back to the
-    * admission contract's IllegalArgumentException. */
-  private val InBatchDupMarker = "duplicate timestamp within batch:"
-
   private def dtCol = to_date(timestamp_micros(col("ts")))
 
   /** The whole store as one logical table (records schema + dt), with
@@ -817,11 +812,20 @@ final class BucketStore(val spark: SparkSession, val root: String,
     snap.rows
   }
 
-  /** Append a batch of records.
+  /** Append a batch of records — the BULK admission path, for frames
+    * whose keys are not on the driver. Admission is key-only: one
+    * aggregation over (bucket, entry, ts) yields the in-batch duplicate
+    * flag and the ts bounds, and a bounded clash join against the
+    * existing keys runs only when the store has bucket dirs. Payload
+    * bytes shuffle once, in the partitioned write. Keyed writes (every
+    * HTTP write) admit on the driver instead: [[writeFolded]] and
+    * [[writeStagedSlices]].
     * @param onConflict Error → reject batch if any (bucket,entry,ts)
-    *        already exists (the reference's 409, entry.rs conflict);
-    *        Skip → drop conflicting rows; Overwrite is intentionally not
-    *        offered (records are immutable, only labels update).
+    *        repeats within it or already exists (the reference's 409,
+    *        entry.rs conflict); Skip → keep the first of each in-batch
+    *        repeat and drop rows whose key exists; Overwrite is
+    *        intentionally not offered (records are immutable, only labels
+    *        update).
     */
   def write(records: DataFrame, onConflict: Conflict = Conflict.Error,
       maxRecordsPerFile: Long = 1000000L,
@@ -856,39 +860,15 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // idempotent replay, e.g. re-delivered streaming micro-batches)
     val deduped = onConflict match {
       case Conflict.Preadmitted =>
-        // caller vouches: keys are in-batch unique and checked against
-        // the store INSIDE the same mutation section (the HTTP batched
-        // write's per-record admission). Skipping the stats-agg and
-        // clash-join jobs here saves ~2 Spark jobs per serving-layer
-        // write — the per-mutation job cost is the measured serving
-        // bottleneck (SCALE.md r17).
+        // keyed admission already ran on the driver inside this same
+        // mutation section (writeFolded / writeStagedSlices)
         batch0
       case Conflict.Skip =>
         antiExisting(batch0.dropDuplicates("bucket", "entry", "ts"),
           knownTsBounds)
-      case Conflict.Error if !baseHasBucketDirs() =>
-        // fresh/empty store — the bulk-initial-ingest shape: no existing
-        // record can clash, so the only admission left is the in-batch
-        // duplicate check, and it rides INSIDE the write job as a window
-        // flag + raise_error instead of a separate stats-agg pass over
-        // the whole batch (guide §5: don't pay an extra pass for a check
-        // the one required pass can carry). Reject-before-write holds:
-        // a raised duplicate aborts the write JOB, and the committer's
-        // staging dirs (_temporary) are invisible to partition discovery
-        // — no row of a rejected batch is ever readable. The wrapped
-        // SparkException is re-shaped to the contract's
-        // IllegalArgumentException below (see the write action).
-        val dupW = org.apache.spark.sql.expressions.Window
-          .partitionBy("bucket", "entry", "ts")
-        batch0.withColumn("payload",
-          when(count(lit(1)).over(dupW) > 1,
-            raise_error(concat(lit(InBatchDupMarker + " "),
-              col("bucket"), lit("/"), col("entry"), lit("@"),
-              col("ts").cast("string"))).cast("binary"))
-            .otherwise(col("payload")))
       case Conflict.Error =>
-        // one aggregation pass yields BOTH the in-batch-duplicate flag and
-        // the ts bounds for the overlap check (was two scans)
+        // one key-only aggregation pass yields BOTH the in-batch-duplicate
+        // flag and the ts bounds for the overlap check
         val stats = batch0
           .groupBy("bucket", "entry", "ts").count()
           .agg(max("count"), min("ts"), max("ts")).collect()(0)
@@ -898,7 +878,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
           throw new IllegalArgumentException(
             s"duplicate timestamp within batch: $dup")
         }
-        if (!stats.isNullAt(1)) {
+        // a store with no bucket dirs holds no key to clash with
+        if (!stats.isNullAt(1) && baseHasBucketDirs()) {
           val existing = baseTableOrEmpty() // keys only
             .filter(col("ts").between(stats.getLong(1), stats.getLong(2)))
             .select("bucket", "entry", "ts")
@@ -926,24 +907,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .mode(SaveMode.Append)
     // per-write codec override (replication transfer compression); None
     // keeps the session default (zstd, set above)
-    try codec.fold(writer)(c => writer.option("compression", c)).parquet(root)
-    catch { case NonFatal(e) =>
-      // the empty-store duplicate check raises inside the job: re-shape
-      // the SparkException wrapping back to the admission contract's
-      // IllegalArgumentException, carrying the offending key
-      var t: Throwable = e
-      var depth = 0
-      while (t != null && depth < 12) {
-        val m = t.getMessage
-        if (m != null && m.contains(InBatchDupMarker)) {
-          val i = m.indexOf(InBatchDupMarker)
-          throw new IllegalArgumentException(m.substring(i).takeWhile(_ != '\n'))
-        }
-        t = t.getCause
-        depth += 1
-      }
-      throw e
-    }
+    codec.fold(writer)(c => writer.option("compression", c)).parquet(root)
     touchedEntries match {
       case Some(pairs) => markEntriesDirty(pairs)
       case None => markAllEntriesDirty()
@@ -952,12 +916,12 @@ final class BucketStore(val spark: SparkSession, val root: String,
 
   private def antiExisting(batch: DataFrame,
       knownTsBounds: Option[(Long, Long)] = None): DataFrame = {
+    if (!baseHasBucketDirs()) return batch
     val bounds = knownTsBounds.getOrElse {
       val r = batch.agg(min("ts"), max("ts")).collect()(0)
       if (r.isNullAt(0)) return batch
       (r.getLong(0), r.getLong(1))
     }
-    if (!baseHasBucketDirs()) return batch
     val existing = baseTableOrEmpty() // keys only
       .filter(col("ts").between(bounds._1, bounds._2))
       .select("bucket", "entry", "ts")
@@ -1378,25 +1342,13 @@ final class BucketStore(val spark: SparkSession, val root: String,
     current.iterator.map(r => (r.getString(0), r.getLong(1))).toSet
   }
 
-  /** Which of `ts` already exist for (bucket, entry) — the per-record
-    * admission check behind the batched write/update endpoints' error
-    * maps (write_batched.rs / update_batched.rs report per-record
-    * 409/404 instead of failing the batch). Bounded: `ts` comes from
-    * HTTP headers, so the isin list and the collect stay small. */
-  def existingTimestamps(bucket: String, entry: String,
-      ts: Seq[Long]): Set[Long] = {
-    if (ts.isEmpty) return Set.empty
-    baseTableOrEmpty()
-      .filter(col("bucket") === bucket && col("entry") === entry &&
-        col("ts").between(ts.min, ts.max) && col("ts").isin(ts: _*))
-      .select("ts").collect().map(_.getLong(0)).toSet
-  }
-
-  /** Multi-entry variant of [[existingTimestamps]] — ONE scan admits a
-    * whole coalesced fold (every request's conflict check) instead of
-    * one Spark job per request. Keys are (entry, ts) within `bucket`;
-    * the ts `isin` bounds the collect exactly like the single-entry
-    * form (entry partition pruning + ts dictionary filter). */
+  /** Which of the (entry, ts) `keys` already exist in `bucket` — the
+    * keyed admission check behind every HTTP write's per-record 409
+    * (write_batched.rs / io/write.rs report per-record errors instead of
+    * failing the batch) and the remove path's found/not-found. ONE scan
+    * admits a whole coalesced fold. Bounded: keys come from HTTP
+    * headers, so the entry/ts `isin` lists (entry partition pruning +
+    * ts dictionary filter) and the collect stay small. */
   def existingKeys(bucket: String,
       keys: Seq[(String, Long)]): Set[(String, Long)] = {
     if (keys.isEmpty) return Set.empty
@@ -1916,81 +1868,58 @@ final class BucketStore(val spark: SparkSession, val root: String,
     new org.apache.hadoop.fs.Path(
       s"$root/$StagingDir/${java.util.UUID.randomUUID}")
 
-  /** Write one record whose payload was spooled to a staging file
-    * (HttpApi streams request bodies there in fixed-size chunks — the
-    * analog of the reference's streamed bodies,
-    * api/http/entry/write_single.rs). The bytes flow staging file →
-    * executor task → parquet writer via a `binaryFile` scan; the serving
-    * layer never materializes the payload. The staging file is deleted
-    * whether the write succeeds or not. */
-  def writeStaged(bucket: String, entry: String, ts: Long,
-      labels: Map[String, String], contentType: String,
-      staged: org.apache.hadoop.fs.Path,
-      onConflict: Conflict = Conflict.Error): Unit = {
-    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val len = fs.getFileStatus(staged).getLen
-      val df = spark.read.format("binaryFile").load(staged.toString)
-        .select(
-          lit(bucket).as("bucket"), lit(entry).as("entry"),
-          lit(ts).as("ts"),
-          typedLit(labels).as("labels"),
-          typedLit(Map.empty[String, String]).as("computed_labels"),
-          lit(contentType).as("content_type"),
-          lit(Records.State.Finished).as("state"),
-          col("content").as("payload"))
-      writeWithSettings(bucket, df, onConflict, incomingBytes = len,
-        touchedEntries = Some(Seq((bucket, entry))))
-      usage.countWrite(bucket, entry, 1L, len)
-    } finally fs.delete(staged, false)
-  }
-
-  /** Write a multi-record batch whose concatenated payloads were spooled
-    * to one staging file (the io-v2 wire path for large batches). Each
-    * record's bytes are sliced out executor-side with positioned reads —
-    * one payload in memory per task at a time, nothing buffered by the
-    * serving layer. Slices are keyed by entry so the read parallelism
-    * follows the write partitioning. */
+  /** Keyed write of records whose payloads were spooled to one staging
+    * file (HttpApi streams large request bodies there in fixed-size
+    * chunks — the analog of the reference's streamed bodies,
+    * api/http/entry/write_single.rs; a single record is one slice at
+    * offset 0). Admission runs here, inside the store's mutation
+    * section: a slice whose key already exists, or repeats an earlier
+    * slice's key (keep-first), is dropped and the rest are written
+    * honoring the bucket's settings. Each survivor's bytes are sliced
+    * out executor-side with positioned reads — one payload in memory per
+    * task at a time, nothing buffered by the serving layer. Slices are
+    * keyed by entry so the read parallelism follows the write
+    * partitioning. The staging file is deleted in all cases.
+    * @return the (entry, ts) keys rejected because they already exist */
   def writeStagedSlices(bucket: String, staged: org.apache.hadoop.fs.Path,
-      slices: Seq[BucketStore.StagedSlice],
-      onConflict: Conflict = Conflict.Error): Unit = {
+      slices: Seq[BucketStore.StagedSlice]): Set[(String, Long)] = mutating {
     val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      val total = slices.map(_.len).sum
-      val pathStr = staged.toString
-      val b = bucket
-      import spark.implicits._
-      val df = graft.core.Partitioning.pinned(
-          spark.createDataset(slices), col("entry"))
-        .mapPartitions { it =>
-          if (!it.hasNext) Iterator.empty[Records.Record]
-          else {
-            val p = new org.apache.hadoop.fs.Path(pathStr)
-            val pfs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            val in = pfs.open(p)
-            Option(org.apache.spark.TaskContext.get())
-              .foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-            it.map { s =>
-              val buf = new Array[Byte](s.len.toInt)
-              in.readFully(s.offset, buf) // positioned read — thread-safe
-              Records.Record(b, s.entry, s.ts, s.labels,
-                Map.empty[String, String], s.contentType,
-                Records.State.Finished, buf)
+      val existing = existingKeys(bucket, slices.map(s => (s.entry, s.ts)))
+      val seen = scala.collection.mutable.HashSet.empty[(String, Long)]
+      val survivors = slices.filter(s =>
+        !existing((s.entry, s.ts)) && seen.add((s.entry, s.ts)))
+      if (survivors.nonEmpty) {
+        val pathStr = staged.toString
+        val b = bucket
+        import spark.implicits._
+        val df = graft.core.Partitioning.pinned(
+            spark.createDataset(survivors), col("entry"))
+          .mapPartitions { it =>
+            if (!it.hasNext) Iterator.empty[Records.Record]
+            else {
+              val p = new org.apache.hadoop.fs.Path(pathStr)
+              val pfs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+              val in = pfs.open(p)
+              Option(org.apache.spark.TaskContext.get())
+                .foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+              it.map { s =>
+                val buf = new Array[Byte](s.len.toInt)
+                in.readFully(s.offset, buf) // positioned read — thread-safe
+                Records.Record(b, s.entry, s.ts, s.labels,
+                  Map.empty[String, String], s.contentType,
+                  Records.State.Finished, buf)
+              }
             }
-          }
-        }.toDF()
-      writeWithSettings(bucket, df, onConflict, incomingBytes = total,
-        touchedEntries = Some(slices.map(s => (bucket, s.entry)).distinct))
-      for ((entry, es) <- slices.groupBy(_.entry))
-        usage.countWrite(bucket, entry, es.size.toLong, es.map(_.len).sum)
+          }.toDF()
+        writeWithSettings(bucket, df, Conflict.Preadmitted,
+          incomingBytes = survivors.map(_.len).sum,
+          touchedEntries = Some(survivors.map(s => (bucket, s.entry)).distinct))
+        for ((entry, es) <- survivors.groupBy(_.entry))
+          usage.countWrite(bucket, entry, es.size.toLong, es.map(_.len).sum)
+      }
+      existing
     } finally fs.delete(staged, false)
-  }
-
-  /** HARD quota (quotas.rs:53-66): reject writes that would exceed it. */
-  def writeWithHardQuota(records: DataFrame, bucket: String, maxBytes: Long): Unit = {
-    if (bucketSizeBytes(bucket) >= maxBytes)
-      throw new IllegalStateException(s"bucket '$bucket' over hard quota")
-    write(records)
   }
 
   // ----------------------------------------------------- bucket settings
@@ -2137,17 +2066,20 @@ object BucketStore {
   private[engine] def exportPathLock(qualifiedPath: String): Object =
     exportPathLocks(math.floorMod(qualifiedPath.hashCode, 64))
 
+  /** Conflict policy of a BULK [[BucketStore.write]]: `Error` rejects the
+    * whole batch on any repeated or existing (bucket, entry, ts); `Skip`
+    * keeps the first of each repeat and drops existing keys. Keyed
+    * writes ([[BucketStore.writeFolded]], [[BucketStore.writeStagedSlices]])
+    * take no policy: they drop existing keys and return them. */
   sealed trait Conflict
   object Conflict {
     case object Error extends Conflict
     case object Skip extends Conflict
-    /** Admission already happened: the caller verified in-batch key
-      * uniqueness and absence-from-store inside the SAME [[mutating]]
-      * section this write runs in, so the write skips its own dedup and
-      * clash jobs. NEVER use outside a mutation-section admission — an
-      * unchecked duplicate key would land two records on one (bucket,
-      * entry, ts). */
-    case object Preadmitted extends Conflict
+    /** Keyed admission already ran: the store itself checked in-batch
+      * key uniqueness and absence-from-store on the driver inside the
+      * SAME [[BucketStore.mutating]] section this write runs in, so the
+      * write skips its own dedup and clash jobs. */
+    private[BucketStore] case object Preadmitted extends Conflict
   }
 
   /** Settings JSON file inside the bucket's partition directory — the

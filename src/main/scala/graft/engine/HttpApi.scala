@@ -196,8 +196,8 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       if (provisionedResources.systemEvents.enabled) {
         val now = System.currentTimeMillis()
         val dur = (now - lastUsageFlushMs.getAndSet(now)) / 1000.0
-        graft.lifecycle.Lifecycle.flushUsage(store, systemLog, dur,
-          extraEvents = auditLog.drainAsEvents())
+        auditLog.drainInto(audit => graft.lifecycle.Lifecycle.flushUsage(
+          store, systemLog, dur, extraEvents = audit)): Unit
       } else flushAuditNow()
     } catch { case scala.util.control.NonFatal(_) => () }
   }
@@ -1028,25 +1028,24 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         throw ApiError(400,
           "Content is shorter than expected: no more data to read")
     }
-    try {
+    val rejected =
       if (head.length < spoolThresholdBytes) {
         checkDeclared(head.length.toLong)
         // coalesced: concurrent single writes share one store mutation
-        val rejected = writeCoalescer.submit(BucketStore.FoldReq(bucket,
+        writeCoalescer.submit(BucketStore.FoldReq(bucket,
           Seq(BucketStore.FoldRec(entry, ts, labelHeaders(ex), ct, head))))
-        if (rejected.nonEmpty)
-          throw conflict(s"A record with timestamp $ts already exists")
       } else {
         val staged = spoolToStaging(head, in)
         val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-        try checkDeclared(fs.getFileStatus(staged).getLen)
+        val len = fs.getFileStatus(staged).getLen
+        try checkDeclared(len)
         catch { case e: ApiError => fs.delete(staged, false); throw e }
         spooledWrites.incrementAndGet()
-        store.writeStaged(bucket, entry, ts, labelHeaders(ex), ct, staged)
+        store.writeStagedSlices(bucket, staged, Seq(BucketStore.StagedSlice(
+          entry, ts, labelHeaders(ex), ct, 0L, len)))
       }
-    } catch { case e: IllegalArgumentException if
-        Option(e.getMessage).exists(_.contains("already exists")) =>
-      throw conflict(s"A record with timestamp $ts already exists") }
+    if (rejected.nonEmpty)
+      throw conflict(s"A record with timestamp $ts already exists")
     createdBuckets.add(bucket)
     json(ex, 200, JObject())
   }
@@ -2009,29 +2008,21 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         fs.delete(staged, false)
         throw unprocessable("Content length mismatch with record headers")
       }
-      // spooled batches keep their own mutation section (the body is on
-      // disk, not foldable without re-spooling) — per-record admission
-      // runs inside it, same semantics as the coalesced path
-      store.mutating {
-        val existing = store.existingKeys(bucket,
-          decoded.zipWithIndex.collect { case (r, i) if !dupIdx(i) =>
-            (r.entry, r.timestamp) })
-        for ((entry, ts) <- existing) rejectHeader(entry, ts)
-        val slices = decoded.zipWithIndex
-          .foldLeft((0L, Vector.empty[BucketStore.StagedSlice])) {
-          case ((off, acc), (rec, i)) =>
-            (off + rec.header.contentLength,
-              if (dupIdx(i) || existing((rec.entry, rec.timestamp))) acc
-              else acc :+ BucketStore.StagedSlice(rec.entry, rec.timestamp,
-                rec.header.labels, rec.header.contentType,
-                off, rec.header.contentLength))
-        }._2
-        spooledWrites.incrementAndGet()
-        if (slices.nonEmpty)
-          store.writeStagedSlices(bucket, staged, slices,
-            onConflict = BucketStore.Conflict.Preadmitted) // admitted above
-        else fs.delete(staged, false): Unit
-      }
+      // spooled batches take their own mutation (the body is on disk, not
+      // foldable without re-spooling); the store admits each record
+      // inside it, same semantics as the coalesced path
+      val slices = decoded.zipWithIndex
+        .foldLeft((0L, Vector.empty[BucketStore.StagedSlice])) {
+        case ((off, acc), (rec, i)) =>
+          (off + rec.header.contentLength,
+            if (dupIdx(i)) acc
+            else acc :+ BucketStore.StagedSlice(rec.entry, rec.timestamp,
+              rec.header.labels, rec.header.contentType,
+              off, rec.header.contentLength))
+      }._2
+      spooledWrites.incrementAndGet()
+      for ((entry, ts) <- store.writeStagedSlices(bucket, staged, slices))
+        rejectHeader(entry, ts)
     }
     createdBuckets.add(bucket)
     json(ex, 200, JObject())
@@ -2131,8 +2122,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     // same ts fails into the error map and a RecordDrainer eats its body
     // slice while the REST of the batch writes (write_batched.rs:322-330)
     // — never an all-or-nothing batch failure. Keep-first leaves the
-    // surviving rows in-batch unique, preserving the Preadmitted
-    // invariant the engine write relies on.
+    // surviving rows in-batch unique, as the coalesced fold requires.
     val dupIdx: Set[Int] = {
       val seen = scala.collection.mutable.HashSet.empty[Long]
       timed.iterator.zipWithIndex
@@ -2143,21 +2133,6 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         s"409,A record with timestamp $ts already exists")
     val in = requestBody(ex)
     val head = in.readNBytes(spoolThresholdBytes)
-    // The per-record conflict admission (the reference checks per
-    // record) runs inside the SAME store mutation section as the write:
-    // checked outside it, a concurrent write of one of the batch's
-    // timestamps between admission and write would trip the engine-level
-    // clash check and fail the WHOLE batch — the reference degrades such
-    // a record to its per-record 409 entry and writes the rest
-    // (write_batched.rs error map). The body is fully consumed BEFORE
-    // the section so a slow client never holds the store lock.
-    def admitConflicts(): Set[Long] = {
-      val existing = store.existingTimestamps(bucket, entry, timed.map(_._1))
-      for (ts <- timed.map(_._1) if existing(ts))
-        respH.set(s"x-reduct-error-$ts",
-          s"409,A record with timestamp $ts already exists")
-      existing
-    }
     val written: Int = inFlight.withWriterSlot {
       if (head.length < spoolThresholdBytes) {
       val body = head
@@ -2194,22 +2169,25 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         fs.delete(staged, false)
         throw unprocessable("Content length mismatch with record headers")
       }
-      store.mutating {
-        val existing = admitConflicts()
-        val slices = timed.zipWithIndex
-          .foldLeft((0L, Vector.empty[BucketStore.StagedSlice])) {
-          case ((off, acc), ((ts, hdr), i)) =>
-            (off + hdr.contentLength,
-              if (existing(ts) || dupIdx(i)) acc // slice skipped, offset still advances
-              else acc :+ BucketStore.StagedSlice(entry, ts, hdr.labels,
-                hdr.contentType, off, hdr.contentLength))
-        }._2
-        spooledWrites.incrementAndGet()
-        if (slices.nonEmpty) store.writeStagedSlices(bucket, staged, slices,
-          onConflict = BucketStore.Conflict.Preadmitted) // admitted above
-        else fs.delete(staged, false): Unit
-        slices.size
-      }
+      // The store admits each record in the same mutation section as the
+      // write: an existing ts degrades to its per-record 409 entry and
+      // the rest are written (write_batched.rs error map). The body is
+      // fully consumed BEFORE that section, so a slow client never holds
+      // the store lock.
+      val slices = timed.zipWithIndex
+        .foldLeft((0L, Vector.empty[BucketStore.StagedSlice])) {
+        case ((off, acc), ((ts, hdr), i)) =>
+          (off + hdr.contentLength,
+            if (dupIdx(i)) acc // slice skipped, offset still advances
+            else acc :+ BucketStore.StagedSlice(entry, ts, hdr.labels,
+              hdr.contentType, off, hdr.contentLength))
+      }._2
+      spooledWrites.incrementAndGet()
+      val rejected = store.writeStagedSlices(bucket, staged, slices)
+      for ((_, ts) <- rejected)
+        respH.set(s"x-reduct-error-$ts",
+          s"409,A record with timestamp $ts already exists")
+      slices.size - rejected.size
     }
     }
     json(ex, 200, JObject("written_records" -> JInt(BigInt(written))))

@@ -47,13 +47,27 @@ final class UsageCounters {
     DrainedUsage(out.iterator.map { case (b, t) =>
       b -> Drained(t.writeBytes, t.readBytes, t.recordsWritten,
         t.recordsRead, t.writtenEntries.size.toLong, t.readEntries.size.toLong)
-    }.toMap)
+    }.toMap)(out.toMap)
+  }
+
+  /** Merge a drained interval back in — its `$system` write failed — so
+    * the next flush reports it together with the traffic since. */
+  def restore(d: DrainedUsage): Unit = synchronized {
+    for ((b, old) <- d.traffic) {
+      val t = perBucket.getOrElseUpdate(b, new Traffic)
+      t.writeBytes += old.writeBytes
+      t.readBytes += old.readBytes
+      t.recordsWritten += old.recordsWritten
+      t.recordsRead += old.recordsRead
+      t.writtenEntries ++= old.writtenEntries
+      t.readEntries ++= old.readEntries
+    }
   }
 }
 
 object UsageCounters {
 
-  private final class Traffic {
+  private[engine] final class Traffic {
     var writeBytes = 0L
     var readBytes = 0L
     var recordsWritten = 0L
@@ -68,7 +82,8 @@ object UsageCounters {
       recordsWritten: Long, recordsRead: Long,
       writtenEntries: Long, readEntries: Long)
 
-  final case class DrainedUsage(buckets: Map[String, Drained]) {
+  final case class DrainedUsage(buckets: Map[String, Drained])(
+      private[engine] val traffic: Map[String, Traffic]) {
     def total: Drained = Drained(
       buckets.valuesIterator.map(_.writeBytes).sum,
       buckets.valuesIterator.map(_.readBytes).sum,

@@ -115,7 +115,11 @@ object Lifecycle {
     * snapshot — one aggregation job over the store plus a per-bucket
     * file-listing, at flush cadence (default 60 s), never per record.
     * `written_entries`, `read_entries` and `record_count` are also
-    * pinned as queryable record labels. */
+    * pinned as queryable record labels.
+    *
+    * Returns whether the events were written. When they were not, or
+    * the flush throws, the drained counters are put back for the next
+    * flush — telemetry never loses what it took out of a buffer. */
   def flushUsage(store: BucketStore, syslog: graft.engine.SystemLog,
       durationSec: Double,
       nowUs: Long = System.currentTimeMillis() * 1000L,
@@ -124,8 +128,20 @@ object Lifecycle {
         * store job per telemetry tick, not one per family). Appended
         * after the usage events, so `usage/total` keeps the earliest
         * ts of the flush. */
-      extraEvents: Seq[graft.engine.SystemLog.Event] = Nil): Unit = {
+      extraEvents: Seq[graft.engine.SystemLog.Event] = Nil): Boolean = {
     val drained = store.usage.drain()
+    val written =
+      try writeUsageEvents(store, syslog, durationSec, nowUs, extraEvents, drained)
+      catch { case scala.util.control.NonFatal(e) =>
+        store.usage.restore(drained); throw e }
+    if (!written) store.usage.restore(drained)
+    written
+  }
+
+  private def writeUsageEvents(store: BucketStore,
+      syslog: graft.engine.SystemLog, durationSec: Double, nowUs: Long,
+      extraEvents: Seq[graft.engine.SystemLog.Event],
+      drained: graft.engine.UsageCounters.DrainedUsage): Boolean = {
     // base table, not table(): per-bucket record/entry COUNTS cannot be
     // changed by label patches, so the snapshot job skips the overlay
     // lookup and rides the version-cached file index (r20 — this

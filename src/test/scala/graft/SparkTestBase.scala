@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
@@ -16,14 +17,29 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     * counting). */
   def countJobs(f: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         jobs.incrementAndGet(): Unit
-    }
+    })(f)
+    jobs.get()
+  }
+
+  /** Shuffle bytes written by the tasks that end while `f` runs
+    * (listener-bus flushed before summing). */
+  def shuffleWriteBytes(f: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    listening(new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    })(f)
+    bytes.get()
+  }
+
+  private def listening(listener: SparkListener)(f: => Unit): Unit = {
     spark.sparkContext.addSparkListener(listener)
     try { f; Thread.sleep(500) } // jobs start synchronously; let the bus drain
     finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
   }
 
   override def afterAll(): Unit = super.afterAll()

@@ -66,6 +66,8 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException] {
       store.write(recordsDf(Seq(("e", 1L, Map()), ("e", 1L, Map()))))
     }
+    assert(store.tableOrEmpty().count() == 0,
+      "a rejected batch on a fresh store leaves no readable row")
     store.write(recordsDf(Seq(("e", 1L, Map("v" -> "1")))))
     intercept[IllegalArgumentException] {
       store.write(recordsDf(Seq(("e", 1L, Map("v" -> "2")))))
@@ -76,6 +78,26 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     store.write(recordsDf(Seq(("e", 1L, Map()), ("e", 2L, Map()))),
       BucketStore.Conflict.Skip)
     assert(store.table().count() == 3)
+  }
+
+  test("a fresh-store Conflict.Error write shuffles each payload once") {
+    import scala.jdk.CollectionConverters._
+    val store = newStore()
+    val rnd = new scala.util.Random(64)
+    val n = 64
+    val size = 64 * 1024
+    val rows = (0 until n).map { i =>
+      val payload = new Array[Byte](size)
+      rnd.nextBytes(payload) // incompressible: shuffle bytes ≈ payload bytes
+      Row("b", s"e${i % 4}", i.toLong, Map.empty[String, String],
+        Map.empty[String, String], "", Records.State.Finished, payload)
+    }
+    val df = spark.createDataFrame(rows.asJava, Records.schema)
+    val shuffled = shuffleWriteBytes { store.write(df) }
+    val payloadBytes = n.toLong * size
+    assert(shuffled < payloadBytes * 3 / 2,
+      s"$shuffled shuffle bytes for $payloadBytes payload bytes")
+    assert(store.table().count() == n)
   }
 
   test("updateLabels merges and removes keys, payload untouched") {
@@ -188,9 +210,12 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(evicted > 0)
     val minTs = store.table().agg(min("ts")).collect()(0).getLong(0)
     assert(minTs > 0L, "oldest day evicted first")
-    intercept[IllegalStateException] {
-      store.writeWithHardQuota(recordsDf(Seq(("e", 100L, Map()))), "b", 1L)
+    store.putBucketSettings("b", BucketStore.BucketSettings(
+      quotaType = Some("HARD"), quotaSize = Some(1L)))
+    val e = intercept[IllegalArgumentException] {
+      store.writeWithSettings("b", recordsDf(Seq(("e", 100L, Map()))))
     }
+    assert(e.getMessage == "Quota of 'b' exceeded")
   }
 
   test("RS_ENGINE_MAX_STORAGE_SIZE analog: global cap rejects across buckets") {

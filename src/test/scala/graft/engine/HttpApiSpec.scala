@@ -1117,6 +1117,120 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty)
   }
 
+  /** `_upload/` holds no staged body. */
+  private def stagingEmpty(): Boolean = {
+    val staging = new org.apache.hadoop.fs.Path(
+      s"${store.root}/${BucketStore.StagingDir}")
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    !fs.exists(staging) || fs.listStatus(staging).isEmpty
+  }
+
+  /** `n` deterministic bytes, distinct per `seed`. */
+  private def bytesOf(n: Int, seed: Int): Array[Byte] =
+    Array.tabulate[Byte](n)(i => (i * 31 + seed).toByte)
+
+  test("spooled single write to an existing ts: 409, record unchanged") {
+    assert(req("POST", "/b/sps").statusCode() == 200)
+    val first = bytesOf(2 * 1024 * 1024, 1)
+    assert(req("POST", "/b/sps/e?ts=5", first).statusCode() == 200)
+    val before = api.spooledWrites.get()
+    val again = req("POST", "/b/sps/e?ts=5", bytesOf(2 * 1024 * 1024, 2))
+    assert(again.statusCode() == 409, new String(again.body()))
+    assert(api.spooledWrites.get() == before + 1, "body must take the spooled path")
+    assert(java.util.Arrays.equals(req("GET", "/b/sps/e?ts=5").body(), first),
+      "the stored record keeps its first payload")
+    assert(stagingEmpty(), "staging file deleted after the rejected write")
+  }
+
+  test("spooled v1 batch with one existing ts: 200, per-record 409, rest written") {
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    assert(req("POST", "/b/spb").statusCode() == 200)
+    assert(req("POST", "/b/spb/e?ts=200", "old".getBytes).statusCode() == 200)
+    val payloads = Seq(100L, 200L, 300L).map(ts => ts -> bytesOf(512 * 1024, ts.toInt))
+    val before = api.spooledWrites.get()
+    val w = req("POST", "/b/spb/e/batch", payloads.flatMap(_._2).toArray,
+      headers = payloads.map { case (ts, p) =>
+        s"x-reduct-time-$ts" -> s"${p.length},application/octet-stream" })
+    assert(w.statusCode() == 200, new String(w.body()))
+    assert(api.spooledWrites.get() == before + 1, "body must take the spooled path")
+    assert(w.headers().firstValue("x-reduct-error-200").get()
+      .startsWith("409,"))
+    assert((jsonOf(w) \ "written_records").extract[Long] == 2L)
+    assert(new String(req("GET", "/b/spb/e?ts=200").body()) == "old")
+    for ((ts, p) <- payloads if ts != 200L)
+      assert(java.util.Arrays.equals(req("GET", s"/b/spb/e?ts=$ts").body(), p),
+        s"record $ts written")
+    assert(stagingEmpty())
+  }
+
+  test("spooled io-v2 batch with one existing key: 200, per-record 409, rest written") {
+    assert(req("POST", "/b/spi").statusCode() == 200)
+    assert(req("POST", "/b/spi/e1?ts=2000", "old".getBytes).statusCode() == 200)
+    val recs = Seq(("e1", 1000L), ("e1", 2000L), ("e2", 1000L)).zipWithIndex
+      .map { case ((e, ts), i) => (e, ts, bytesOf(512 * 1024, i)) }
+    val before = api.spooledWrites.get()
+    val w = req("POST", "/io/spi/write", recs.flatMap(_._3).toArray,
+      headers = BatchWire.encodeBatchV2(recs.map { case (e, ts, p) =>
+        (e, ts, BatchWire.RecordHeader(p.length.toLong,
+          "application/octet-stream", Map.empty)) }))
+    assert(w.statusCode() == 200, new String(w.body()))
+    assert(api.spooledWrites.get() == before + 1, "body must take the spooled path")
+    val errs = w.headers().map().keySet().toArray.map(_.toString.toLowerCase)
+      .filter(_.startsWith("x-reduct-error-")).toSeq
+    // e1 is entry index 0; start ts 1000, so e1@2000 is delta 1000
+    assert(errs == Seq("x-reduct-error-0-1000"), s"per-record errors: $errs")
+    assert(w.headers().firstValue(errs.head).get().startsWith("409,"))
+    assert(new String(req("GET", "/b/spi/e1?ts=2000").body()) == "old")
+    for ((e, ts, p) <- recs if !(e == "e1" && ts == 2000L))
+      assert(java.util.Arrays.equals(req("GET", s"/b/spi/$e?ts=$ts").body(), p),
+        s"record $e@$ts written")
+    assert(stagingEmpty())
+  }
+
+  test("a failed $system write puts drained audit tallies and usage counters back") {
+    import org.apache.spark.sql.functions.col
+    val tStore = new BucketStore(spark,
+      Files.createTempDirectory("graft-telemetry").toString)
+    val tApi = new HttpApi(tStore, apiToken = "root-token")
+    try {
+      val tPort = { tApi.start(); tApi.boundPort }
+      def treq(method: String, path: String, body: Array[Byte] = Array.empty) =
+        client.send(HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:$tPort/api/v1$path"))
+          .header("Authorization", "Bearer root-token")
+          .method(method, HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+          HttpResponse.BodyHandlers.ofByteArray())
+      assert(treq("POST", "/b/tb").statusCode() == 200)
+      assert(treq("POST", "/b/tb/e?ts=1", "abcd".getBytes).statusCode() == 200)
+      assert(treq("POST", "/b/tb/e?ts=2", "efghij".getBytes).statusCode() == 200)
+      val freeSpace = tStore.freeSpaceFn
+      tStore.freeSpaceFn = () => 0L // every non-empty write now fails (507)
+      assert(treq("GET", "/b/tb/e?ts=1").statusCode() == 200)
+      def system(prefix: String, suffix: String = ""): Seq[String] =
+        tStore.tableOrEmpty()
+          .filter(col("bucket") === "$system" &&
+            col("entry").startsWith(prefix) && col("entry").endsWith(suffix))
+          .collect().map(r => new String(r.getAs[Array[Byte]]("payload"), "UTF-8"))
+          .toSeq
+      tApi.flushTelemetryNow()
+      assert(system("audit/").isEmpty && system("usage/").isEmpty,
+        "the refused flush wrote nothing")
+      tStore.freeSpaceFn = freeSpace
+      tApi.flushTelemetryNow()
+      def summed(payloads: Seq[String], field: String): Long = payloads.map { p =>
+        s""""$field":(\\d+)""".r.findFirstMatchIn(p).map(_.group(1).toLong)
+          .getOrElse(0L)
+      }.sum
+      val usage = system("usage/", "/tb")
+      assert(summed(usage, "write_bytes") == 10L, s"usage: $usage")
+      assert(summed(usage, "records_written") == 2L, s"usage: $usage")
+      assert(summed(usage, "read_bytes") == 4L, s"usage: $usage")
+      val writes = system("audit/")
+        .filter(_.contains("\"method\":\"POST\",\"path\":\"/api/v1/b/tb/e\""))
+      assert(summed(writes, "call_count") == 2L, s"audit: ${system("audit/")}")
+    } finally { tApi.stop(); tStore.close() }
+  }
+
   test("server errors are captured to $system logs with an ERROR level") {
     import org.apache.spark.sql.functions.{col, element_at}
     // one-shot failing disk probe: the request's preflight throws an
@@ -1313,7 +1427,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     // admitted (PR-1411) — proving the 422 keys on the declaration only
     val ok = raw("x-reduct-content-length: 0\r\n")
     assert(ok.contains("200"), s"declared length must admit, got: $ok")
-    assert(store.existingTimestamps("ncl", "e", Seq(7L)) == Set(7L))
+    assert(store.existingKeys("ncl", Seq(("e", 7L))) == Set(("e", 7L)))
   }
 
   test("declared-vs-actual and declared-vs-sum content length parity " +
@@ -1341,7 +1455,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     val long = raw("/api/v1/b/cl/e?ts=2",
       "x-reduct-content-length: 1\r\n", "2\r\nab\r\n")
     assert(long.contains("400"), s"overlong body must 400, got: $long")
-    assert(store.existingTimestamps("cl", "e", Seq(1L, 2L)).isEmpty,
+    assert(store.existingKeys("cl", Seq(("e", 1L), ("e", 2L))).isEmpty,
       "neither mismatched record may land")
     // v1 batched write WITHOUT any content-length header is ACCEPTED —
     // the record-length sum defines the size (the Content-Encoding
@@ -1350,7 +1464,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     val noHdr = raw("/api/v1/b/cl/e/batch",
       "x-reduct-time-50: 5,text/plain\r\n", "5\r\nhello\r\n")
     assert(noHdr.contains("200"), s"sum-defined batch must admit, got: $noHdr")
-    assert(store.existingTimestamps("cl", "e", Seq(50L)) == Set(50L))
+    assert(store.existingKeys("cl", Seq(("e", 50L))) == Set(("e", 50L)))
     // a PRESENT header that contradicts the sum is a 422
     // (write_batched.rs:293-297)
     val clash = raw("/api/v1/b/cl/e/batch",
